@@ -6,7 +6,9 @@ readable, pruned output.
 from __future__ import annotations
 
 import pathlib
+import uuid
 
+import pytest
 from pyspark.ml.linalg import VectorUDT
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
@@ -17,7 +19,21 @@ from yellowrush_spark_ml_pipeline_spark.flows import (
     train_and_evaluate,
     validate_preprocessed,
 )
+from yellowrush_spark_ml_pipeline_spark.sources import load_table
 from yellowrush_spark_ml_pipeline_spark.sources.readers import read_parquet
+
+
+def _jobs_fired(spark, fn):
+    """``fn()`` and the number of Spark jobs it fired."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_preprocess_lineitem_end_to_end(spark, sf_small, tmp_path):
@@ -36,6 +52,78 @@ def test_preprocess_lineitem_end_to_end(spark, sf_small, tmp_path):
     # labels are strict binary
     bad = back.filter(~F.col("is_over_expected").isin(0, 1) | ~F.col("is_discounted").isin(0, 1))
     assert bad.count() == 0
+
+
+def test_preprocess_lineitem_encoding_matches_fit_on_joined_relation(spark, sf_small):
+    """The flow fits the returnflag encoder on the cleaned scan; a fit on
+    the fully derived and joined relation must give every line the same
+    one-hot vector, because no stage after cleaning adds or drops a row."""
+    from yellowrush_spark_ml_pipeline_spark.ml.pipelines import encode_categorical
+
+    # (orderkey, linenumber) repeats in the synthetic table; these six
+    # carried-through columns identify a line (checked by the length below)
+    key = ["l_orderkey", "l_linenumber", "l_partkey", "l_quantity",
+           "l_extendedprice", "l_discount"]
+    flags = load_table(spark, sf_small, "lineitem").select(*key, "l_returnflag")
+    joined = preprocess_lineitem(spark, sf_small, encode=False).join(flags, key)
+    ref, _ = encode_categorical(
+        joined.withColumn("returnflag_cat", F.col("l_returnflag")), "returnflag_cat"
+    )
+    enc = preprocess_lineitem(spark, sf_small, encode=True)
+
+    def by_line(df):
+        return {
+            tuple(r[:-1]): r.returnflag_cat_ohe
+            for r in df.select(*key, "returnflag_cat_ohe").collect()
+        }
+
+    got, want = by_line(enc), by_line(ref)
+    assert len(got) == enc.count() == joined.count()
+    assert got == want
+    assert len(set(map(str, got.values()))) > 1  # more than one flag value
+
+
+def test_train_and_evaluate_declares_binary_label(spark, sf_small):
+    """Declaring the 0/1 label binary spares the class-count scans of the
+    train split and changes no metric the confusion matrix gives."""
+    from yellowrush_spark_ml_pipeline_spark.ml.pipelines import (
+        evaluate_binary,
+        train_classifier,
+    )
+
+    df = preprocess_lineitem(spark, sf_small, encode=False).cache()
+    feats, label = ["l_extendedprice", "ship_month", "l_quantity"], "is_discounted"
+
+    def undeclared():
+        model, _, test_df = train_classifier(df, feats, label)
+        return evaluate_binary(model, test_df, label)
+
+    try:
+        df.count()
+        want, jobs_undeclared = _jobs_fired(spark, undeclared)
+        got, jobs = _jobs_fired(
+            spark, lambda: train_and_evaluate(df, feats, label, sample_fraction=None)
+        )
+    finally:
+        df.unpersist()
+    assert jobs < jobs_undeclared
+    for metric in ("accuracy", "precision", "recall", "f1"):
+        assert got[metric] == want[metric], metric
+
+
+def test_train_and_evaluate_rejects_non_binary_label(spark):
+    """A label holding a 2 fails the fit; undeclared, the same frame would
+    silently train a 3-class forest."""
+    from yellowrush_spark_ml_pipeline_spark.ml.pipelines import train_classifier
+
+    df = spark.range(300).select(
+        (F.col("id") % 7).cast("double").alias("x"),
+        (F.col("id") % 3).cast("int").alias("y"),
+    )
+    model, _, _ = train_classifier(df, ["x"], "y")
+    assert model.stages[-1].numClasses == 3
+    with pytest.raises(Exception, match="Labels MUST be in"):
+        train_and_evaluate(df, ["x"], "y", sample_fraction=None)
 
 
 def test_validate_preprocessed_gate(spark, sf_small):
@@ -167,6 +255,38 @@ def test_curate_corpus_flow(spark, sf_small, tmp_path):
     langs = {p.name for p in pathlib.Path(out_path).iterdir() if p.name.startswith("lang=")}
     assert langs == {f"lang={r.lang}" for r in curated.select("lang").distinct().collect()}
     curated.unpersist()
+
+
+def test_curate_corpus_persisted_decisions_match_and_are_released(
+    spark, sf_small, tmp_path, monkeypatch
+):
+    """``decision_checkpoint=False`` persists the decision relation instead
+    of checkpointing it: the written corpus is the default path's, and the
+    persisted relation is released once the sink write has run."""
+    from pyspark import StorageLevel
+
+    from yellowrush_spark_ml_pipeline_spark.flows import curate_corpus
+
+    docs = load_table(spark, sf_small, "documents")
+    persisted = []
+    persist = type(docs).persist
+
+    def spy(df, *args, **kwargs):
+        persisted.append(df)
+        return persist(df, *args, **kwargs)
+
+    def written(path):
+        return sorted(map(tuple, read_parquet(spark, path).collect()))
+
+    curate_corpus(docs, output_path=str(tmp_path / "checkpointed"))
+    monkeypatch.setattr(type(docs), "persist", spy)
+    curate_corpus(
+        docs, output_path=str(tmp_path / "persisted"), decision_checkpoint=False
+    )
+    assert persisted
+    assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
+    want = written(str(tmp_path / "checkpointed"))
+    assert want and written(str(tmp_path / "persisted")) == want
 
 
 def test_curate_corpus_redacts_pii(spark, sf_small):

@@ -145,6 +145,17 @@ def test_kmeans_lloyd_validates_params(spark):
         kmeans_lloyd(df, n_assign=0)
 
 
+def test_kmeans_lloyd_rejects_vec_out_with_centroids(spark):
+    """The centroid relation has no per-point rows to carry the input
+    vector, so asking for both is a caller error, not a silent drop."""
+    df = spark.createDataFrame([(0, [0.0])], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="vec_out"):
+        kmeans_lloyd(df, k=1, return_centroids=True, vec_out="embedding")
+    assert kmeans_lloyd(df, k=1, vec_out="v").columns == [
+        "vec_id", "cluster_id", "dist", "v"
+    ]
+
+
 # ------------------------------------------------------- triangle counting
 
 

@@ -15,6 +15,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from yellowrush_spark_ml_pipeline_spark.functions.partitioning import (
+    ensure_scan_parallelism,
+)
 from yellowrush_spark_ml_pipeline_spark.plans.explain import explain_str
 from yellowrush_spark_ml_pipeline_spark.sources import load_table
 from yellowrush_spark_ml_pipeline_spark.sources.readers import read_csv, read_parquet
@@ -360,3 +363,31 @@ def test_compact_parquet_reduces_file_count_preserving_data(spark, sf_small, tmp
     a = sorted(map(tuple, back.collect()))
     b = sorted(map(tuple, events.collect()))
     assert a == b
+
+
+def test_scan_parallelism_reprobes_after_split_size_change(spark, tmp_path):
+    """The partition-count memo is keyed on the confs that size the scan:
+    a smaller ``maxPartitionBytes`` splits the same one-row-group file into
+    many tasks, so the floor must re-probe instead of reusing the count of
+    one task and adding a needless repartition."""
+    import pathlib
+
+    path = str(tmp_path / "one_row_group")
+    spark.range(4000).select(
+        "id", F.sha2(F.col("id").cast("string"), 256).alias("s")
+    ).coalesce(1).write.parquet(path)
+    target = spark.sparkContext.defaultParallelism
+    size = sum(f.stat().st_size for f in pathlib.Path(path).glob("*.parquet"))
+
+    floored = ensure_scan_parallelism(spark.read.parquet(path))
+    assert floored.rdd.getNumPartitions() == target  # one task → repartitioned
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(size // (2 * target)))
+    try:
+        split = spark.read.parquet(path)
+        assert split.rdd.getNumPartitions() >= 2 * target
+        assert ensure_scan_parallelism(split) is split
+    finally:
+        spark.conf.set(key, old)

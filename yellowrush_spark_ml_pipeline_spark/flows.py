@@ -10,12 +10,16 @@ encode→sink executes as ONE lazy plan per flow:
 * ``preprocess_dim_csv``    — the weather flow: schema'd CSV → project/
   round → range filter → validation aggregate → parquet.
 * ``preprocess_lineitem``   — the taxi flow: schema'd parquet → null drop →
-  outlier filter → time features → period binning → rate derivation →
-  4-key historical average (single-plan global fill) → expected value →
-  labels → broadcast dim join + null fill → categorical encoding →
-  final projection → hive-partitioned parquet.
-* ``train_and_evaluate``    — the model flow: sample → split → assemble →
-  RF → cached evaluation → optional persistence (see ml.pipelines).
+  outlier filter → categorical encoding → time features → period
+  binning → rate derivation → 4-key historical average (single-plan
+  global fill) → expected value → labels → broadcast dim join + null
+  fill → final projection → hive-partitioned parquet. No stage after
+  cleaning adds or drops a row, so the encoder fitted on the cleaned scan
+  learns the vocabulary the reference fits on the joined relation, while
+  its fit scans one column instead of re-running the whole plan.
+* ``train_and_evaluate``    — the model flow: declare the 0/1 label
+  binary → sample → split → assemble → RF → cached evaluation → optional
+  persistence (see ml.pipelines).
 
 Everything stays declarative: no action fires until the caller writes,
 counts, or collects, so Catalyst sees the whole pipeline at once
@@ -24,6 +28,7 @@ counts, or collects, so Catalyst sees the whole pipeline at once
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -88,12 +93,21 @@ def preprocess_lineitem(
     of a broadcast-joined enrichment dim, price-per-unit plays speed.
 
     Stage map (reference line): null drop (:373) → outlier filter
-    (:376-384) → time features (:410-425) → period binning (:428-434) →
-    rate (:468) → 4-key historical average with single-plan global fill
-    (:471-496) → expected value (:526) → threshold + exceeds labels
-    (:530-533, :1053-1056) → broadcast dim join + null fill (:558-564) →
-    StringIndexer+OHE (:581-596) → final projection (:607-614) →
-    repartition+partitionBy sink (:640-641)."""
+    (:376-384) → StringIndexer+OHE (:581-596) → time features (:410-425)
+    → period binning (:428-434) → rate (:468) → 4-key historical average
+    with single-plan global fill (:471-496) → expected value (:526) →
+    threshold + exceeds labels (:530-533, :1053-1056) → broadcast dim
+    join + null fill (:558-564) → final projection (:607-614) →
+    repartition+partitionBy sink (:640-641).
+
+    The reference encodes after the joins; here the encoder is fitted
+    right after cleaning. That is exact: the historical average
+    left-joins back on its own group keys and cross-joins a one-row
+    global mean, and the part join is a left join on a unique key, so
+    every later stage keeps the cleaned row set and the indexer counts
+    the same ``l_returnflag`` values. The fit then scans one pruned
+    column of the filtered table instead of re-running the aggregate
+    and both joins."""
     li = load_table(spark, sf_dir, "lineitem")
     li = drop_nulls(li)
     li = filter_ranges(
@@ -105,6 +119,11 @@ def preprocess_lineitem(
             "l_tax": (0.0, None, True, False),
         },
     )
+    ohe_cols: list[str] = []
+    if encode:
+        li, ohe_cols = encode_categorical(
+            li.withColumn("returnflag_cat", F.col("l_returnflag")), "returnflag_cat"
+        )
     li = add_time_features(li, "l_shipdate", prefix="ship_")
     li = add_time_period(li, "ship_hour", "ship_period")
     li = add_speed(li, "l_extendedprice", "l_quantity", out_col="price_rate")
@@ -151,13 +170,7 @@ def preprocess_lineitem(
         "is_discounted",
         "p_retailprice",
     ]
-    if encode:
-        li, ohe_cols = encode_categorical(
-            li.withColumn("returnflag_cat", F.col("l_returnflag")), "returnflag_cat"
-        )
-        out = li.select(*final_cols, *ohe_cols)
-    else:
-        out = li.select(*final_cols)
+    out = li.select(*final_cols, *ohe_cols)
     if output_path:
         write_partitioned_parquet(out, output_path, "ship_year")
     return out
@@ -214,7 +227,7 @@ def curate_corpus(
     all-pairs); the grouping join ships only (doc_id, group_id); the text
     column rides through untouched — no re-tokenization after the filter
     stage decides survival."""
-    from .operators.dedup import dedup_groups, minhash_dedup_pairs
+    from .operators.dedup import dedup_groups, minhash_dedup_pairs, select_canonical
     from .operators.textstats import language_id, quality_score, redact_pii
 
     if redact:
@@ -293,14 +306,15 @@ def curate_corpus(
     # lineage, so an executor loss on a real cluster kills every
     # downstream consumer; persist() keeps it recomputable at the cost
     # of re-running the regex stage after a loss.  Single-JVM runs keep
-    # the default (nothing to lose an executor to).
+    # the default (nothing to lose an executor to).  The persisted
+    # relation is released after the sink write, the flow's terminal
+    # action; without ``output_path`` the caller's action is the terminal
+    # one, and the blocks stay cached until ``spark.catalog.clearCache()``.
     derived = [c for c in kept.columns if c not in docs.columns]
     dec = kept.select("doc_id", *derived)
     if decision_checkpoint:
         dec = dec.localCheckpoint(eager=True)
     else:
-        from pyspark import StorageLevel
-
         dec = dec.persist(StorageLevel.MEMORY_AND_DISK)
     attach = (
         F.broadcast(dec)
@@ -311,8 +325,6 @@ def curate_corpus(
         *[F.col(c) for c in list(docs.columns) + derived]
     )
     if persist_intermediate:
-        from pyspark import StorageLevel
-
         kept = kept.persist(StorageLevel.MEMORY_AND_DISK)
     # hash_fn="md5" switches the dedup tier onto the cross-engine hash
     # (functions/hashing.py) so the WHOLE flow is DuckDB-replayable.
@@ -326,8 +338,6 @@ def curate_corpus(
     # canonical="min_id" keeps the smallest id per dup component (pure
     # filter, no extra shuffle); "best_quality" keeps the highest-quality
     # member via dedup.select_canonical's key-only argmax.
-    from .operators.dedup import select_canonical
-
     out_cols = list(docs.columns) + ["lang_pred", "n_tokens", "quality_score"]
     curated = select_canonical(
         kept,
@@ -341,6 +351,8 @@ def curate_corpus(
                 f"{curated.columns}; pass partition_col= for this corpus"
             )
         write_partitioned_parquet(curated, output_path, partition_col)
+        if not decision_checkpoint:
+            dec.unpersist()
     return curated
 
 
@@ -630,9 +642,16 @@ def train_and_evaluate(
     delay — identical structure, different label): sample → split →
     assemble → RF (reference config) → cached evaluation → optional
     persistence. Returns the metric dict; both reference model pipelines
-    are this function with a different ``label_col``."""
+    are this function with a different ``label_col``.
+
+    The flow is binary by contract, so ``label_col`` is declared a 2-value
+    nominal attribute before the fit. MLlib then takes the class count
+    from the metadata instead of scanning the train split for it, and a
+    label outside {0, 1} fails the fit instead of training a wider
+    forest."""
     from .ml.pipelines import evaluate_binary, save_model, train_classifier
 
+    df = df.withMetadata(label_col, {"ml_attr": {"type": "nominal", "num_vals": 2}})
     model, _, test_df = train_classifier(
         df, feature_cols, label_col, sample_fraction=sample_fraction, seed=seed
     )

@@ -20,17 +20,21 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-# Partition-count memo keyed on (SparkContext identity, analyzed-plan
-# semantic hash).  The ``df.rdd.getNumPartitions()`` probe converts the
-# full analyzed plan to an RDD — driver-side physical planning + file
-# listing, repeated verbatim when the same operator plan is rebuilt
-# (every bench shot, every oracle replay, every flow that composes the
-# same scan twice).  Semantically-equal plans yield the same partition
-# count within one context (same files, same session conf), so the probe
-# runs once per distinct plan instead of once per call (r12 ADVICE).
-# Bounded: cleared wholesale if it ever grows past _NPART_MEMO_MAX —
-# a memo, not a cache of data.
-_NPART_MEMO: dict[tuple[int, int], int] = {}
+# Partition-count memo keyed on (application id, the two confs that size
+# scans and shuffles, analyzed-plan semantic hash).  The
+# ``df.rdd.getNumPartitions()`` probe converts the full analyzed plan to an
+# RDD — driver-side physical planning + file listing, repeated verbatim
+# when the same operator plan is rebuilt (every bench shot, every oracle
+# replay, every flow that composes the same scan twice).  Semantically-
+# equal plans yield the same partition count within one application under
+# the same ``spark.sql.shuffle.partitions`` and
+# ``spark.sql.files.maxPartitionBytes``, so the probe runs once per
+# distinct (plan, confs) instead of once per call.  The application id,
+# unlike ``id(sc)``, is never reused by a later context.  Stale case: a
+# file appended under an already-probed path keeps its old count until
+# the plan or a keyed conf changes.  Bounded: cleared wholesale if it
+# ever grows past _NPART_MEMO_MAX — a memo, not a cache of data.
+_NPART_MEMO: dict[tuple[str, str, str, int], int] = {}
 _NPART_MEMO_MAX = 4096
 
 
@@ -46,7 +50,9 @@ def ensure_scan_parallelism(df: DataFrame, min_fraction: float = 0.5) -> DataFra
     target = spark.sparkContext.defaultParallelism
     try:
         key = (
-            id(spark.sparkContext),
+            spark.sparkContext.applicationId,
+            spark.conf.get("spark.sql.shuffle.partitions"),
+            spark.conf.get("spark.sql.files.maxPartitionBytes"),
             int(df._jdf.queryExecution().analyzed().semanticHash()),
         )
         n = _NPART_MEMO.get(key)

@@ -2145,9 +2145,13 @@ def kmeans_lloyd(
     needs (assignment + vector), like :func:`semantic_dedup`'s prune,
     reads it here instead of re-joining the corpus on the id (one
     id-keyed shuffle join fewer; values bit-identical — it IS the same
-    column)."""
+    column). The centroid relation has no per-point rows to carry it, so
+    ``vec_out`` with ``return_centroids=True`` raises ``ValueError``."""
     if k < 1 or n_assign < 1:
         raise ValueError("k and n_assign must be >= 1")
+    if vec_out and return_centroids:
+        raise ValueError("vec_out applies to the assignment, not to "
+                         "return_centroids=True")
     pts = df.select(F.col(id_col), as_double_array(F.col(emb_col)).alias("_x"))
 
     seeds = pts.orderBy(id_col).limit(k)
